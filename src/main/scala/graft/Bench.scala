@@ -4,80 +4,27 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query at the given SF dir and
   * emits EXACTLY ONE compact JSON line as the last thing on stdout.
   *
-  * The driver parses that line from a FINITE tail-capture of process
-  * output — a ~2.2 KB line lost its head once the query count grew, so
-  * the line is kept aggressively small:
-  *   - per-query values are INTEGER MILLISECONDS; the headline `value`
-  *     stays in seconds per the driver contract;
-  *   - the line carries values ONLY: `"qv":[…]` holds the integer-ms
-  *     medians in sorted-query-name order and `"nq"` the count (a
-  *     parse sanity check). Query names are recoverable by sorting
-  *     `SparkEntry.queries.keys`; `bench_out.json` is the
-  *     authoritative name→seconds map. History: a per-query object
-  *     crossed ~1.57 KB at 147 queries → two-array `qk`/`qv` form;
-  *     at 182 queries that form neared its ~1.6 KB envelope → `qk`
-  *     dropped (this step was pre-decided in round 6). ~4.6 B/entry:
-  *     headroom to 300+ queries.
-  * The FULL names and 3-decimal-second timings are always written to
-  * `bench_out.json` in the working directory as the lossless copy, and
-  * the line is printed after all work so no log output follows it.
+  * The line is read from a FINITE tail-capture of process output, so it
+  * is kept small and printed after all work (no log output may follow):
+  * per-query values are integer milliseconds in `"qv":[…]`, in sorted
+  * query-name order, with `"nq"` their count as a parse check; the
+  * headline `value` stays in seconds. `bench_out.json` in the working
+  * directory is the lossless copy: full names, 3-decimal seconds, the
+  * GC ms of each reported rep (wall ≈ gc → battery debt, wall ≫ gc →
+  * the operator) and the healed list.
   *
   * A query whose every rep throws reports -1 (ms) and contributes 0 to
   * the total — a broken query must look broken, not fast.
   *
-  * ## Battery-interaction control (round 8)
-  *
-  * Round 7's official run showed the battery poisoning its own tail:
-  * at 214 queries × 3 reps in ONE JVM, accumulated allocator/JIT/GC
-  * state inflated in-battery times 2×-12× over the same queries run
-  * isolated (q_dedup_lcs 29.6 s in-battery vs 2.5 s isolated,
-  * judge-verified), even with per-query System.gc() and a 1 GB code
-  * cache. Dose scales with battery size, so the fix is structural:
-  *
-  *  1. PER-QUERY HYGIENE (the root-cause fix, on by default) —
-  *     between queries: drop cached plans (catalog.clearCache), drop
-  *     temp views a query may have registered (q_sql), unpersist any
-  *     leaked RDD block, then System.gc() so one query's garbage is
-  *     not charged to the next. The dominant leak was localCheckpoint
-  *     blocks: the iterative operators (graph-ANN descent rounds,
-  *     dedup label propagation, BPE merge training) checkpoint per
-  *     round and nothing ever unpersisted them, so BlockManager
-  *     memory ratcheted up across the battery — r7 added the most
-  *     checkpoint-heavy operators AND crossed the inflation cliff.
-  *     Measured after the fix (same machine, full 214-query battery,
-  *     one JVM): r6-common subset 58.3 s vs r6's 59.0 s (0.99×),
-  *     q_dedup_lcs 3.2 s vs 29.6 s in BENCH_r07.
-  *  2. SHARDED EXECUTION (contingency, SPARK_GRAFT_BENCH_SHARDS=n) —
-  *     split the battery round-robin into n shards, each run in a
-  *     FRESH child JVM forked with the parent's exact JVM args and
-  *     classpath; each child warms itself (sf0.001 pass over its
-  *     shard + table counts at the target SF) and writes its shard's
-  *     name→[ms, gc_ms] map to a file the parent merges. Child stdout
-  *     goes to a log file so the parent's final JSON line stays the
-  *     last stdout. Default stays 1: hygiene already removed the
-  *     inflation, and a fork failure under the driver would report
-  *     healthy queries as -1 — strictly worse than the measured risk.
-  *  3. SELF-DIAGNOSING OUTPUT — bench_out.json records per query the
-  *     median wall ms AND the GC ms observed during that median rep,
-  *     so a future inflated artifact shows on its face whether the
-  *     time went to GC (battery debt) or to the operator.
-  *
-  * SPARK_GRAFT_BENCH_ONLY forces one JVM so diagnostic subsets stay
-  * comparable. The env var SPARK_GRAFT_BENCH_SHARD is the
-  * parent→child protocol ("i/n"), never set by hand.
-  *
-  * ## Contention de-flake (round 12)
-  *
-  * Three driver batteries in a row tripped the budget gate on queries
-  * that passed idle re-runs — each time a transient box-contention
-  * window inflating a contiguous ALPHABETICAL block. Two structural
-  * fixes: (1) execution order is md5(name), so a contention window
+  * Queries run in md5(name) order, so a transient contention window
   * lands on scattered unrelated queries (noise the median absorbs)
-  * instead of a correlated family block; (2) after the battery, any
-  * query whose median breaches its tools/bench_budget.json budget
-  * (check_bench's 1.5x rule) is re-measured once and the better
-  * median reported — a contention victim collapses, a genuine
-  * regression stays visibly over budget.
+  * instead of inflating a contiguous family block. Hygiene runs before
+  * each query because the battery shares one JVM: cached plans, temp
+  * views, leaked persists (iterative operators' localCheckpoint blocks)
+  * and garbage from one query must not be charged to the next. After
+  * the battery, a query over its tools/bench_budget.json budget by
+  * check_bench's 1.5x rule is re-measured once and the better median
+  * reported (see `healBreaches`).
   */
 object Bench {
   private def ms3(v: Double): Double = math.round(v * 1000) / 1000.0
@@ -109,16 +56,8 @@ object Bench {
     } catch { case _: Throwable => None }
   }
 
-  /** (name, median-wall-seconds or None, gc-ms during the median rep).
-    *
-    * Execution order is the md5 of the query name, NOT alphabetical
-    * (round 12): three driver batteries in a row showed the same false-
-    * positive signature — a transient box-contention window inflating a
-    * CONTIGUOUS alphabetical block (~35 c-e queries at 2-4x), which
-    * reads as a family regression. Hash order spreads any contention
-    * window across unrelated names, so it shows as scattered noise the
-    * median absorbs instead of a correlated block. Reporting stays
-    * sorted by name regardless of execution order.
+  /** (name, median-wall-seconds or None, gc-ms during the median rep),
+    * run in md5(name) order; reporting stays sorted by name.
     */
   private def runBattery(spark: SparkSession, sfDir: String,
                          battery: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
@@ -148,18 +87,13 @@ object Bench {
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
-  /** Second half of the round-12 de-flake: any query whose battery
-    * median breaches its budget (check_bench's rule: wall > 1.5 x
-    * max(budget, 0.15 s)) gets ONE post-battery re-measurement — by
-    * then any transient contention window has usually passed — and
-    * reports the BETTER of the two. A genuine regression stays over
-    * budget (re-running doesn't make slow code fast); a contention
-    * victim collapses back under it. bench_out.json's gc_ms column
-    * still self-diagnoses whichever rep is reported. The returned
-    * healed flag marks every RE-MEASURED query (the published number is
-    * min-of-two-medians either way), so re-baselining and the gate can
-    * tell a healed median from a clean one instead of silently
-    * ratcheting budgets toward the lucky side.
+  /** Any query whose battery median breaches its budget (check_bench's
+    * rule: wall > 1.5 x max(budget, 0.15 s)) gets ONE post-battery
+    * re-measurement — by then a transient contention window has usually
+    * passed — and reports the BETTER of the two. A genuine regression
+    * stays over budget; a contention victim collapses back under it.
+    * The healed flag marks every re-measured query, so re-baselining
+    * and the gate can tell a min-of-two median from a clean one.
     */
   private def healBreaches(spark: SparkSession, sfDir: String,
                            results: Seq[(String, Option[Double], Long)],
@@ -184,100 +118,31 @@ object Bench {
     }
   }
 
-  /** Child-shard entry: time this shard's queries in THIS fresh JVM and
-    * write them to `outFile` as JSON {"name":[ms,gcMs,healed01],...}.
+  /** Warm the JVM, then time `names` at `sfDir`:
+    * name → (median ms or -1, gc ms of that rep, healed).
     */
-  private def runShard(sfDir: String, names: Set[String], reps: Int,
-                       outFile: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, must precede session creation: the generated-class
-      // cache defaults to 100 entries — thrashing once a battery's
-      // codegen stages outgrow it (measured ~+0.1-0.15 s on every small
-      // query in round 6)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Warm the JVM before timing: codegen compilation, classloading, and
-    // the page cache dominate a fresh-JVM first pass. Run this shard's
-    // queries untimed at the smallest available SF (cheap — the data is
-    // 100x smaller), then count the tables at the target SF.
+  private def measure(spark: SparkSession, sfDir: String, names: Set[String],
+                      reps: Int): Map[String, (Long, Long, Boolean)] = {
+    // Codegen compilation, classloading and the page cache dominate a
+    // fresh JVM's first pass: run the queries untimed at the smallest
+    // available SF (the data is 100x smaller), then count the tables at
+    // the target SF.
     val warmDir = {
       val p = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
       if (p.isDirectory && p.getPath != sfDir) p.getPath else sfDir
     }
+    val queries = SparkEntry.queries.filter { case (n, _) => names.contains(n) }
     if (warmDir != sfDir)
-      SparkEntry.queries.foreach { case (n, fn) =>
-        if (names.contains(n))
-          try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      queries.foreach { case (_, fn) =>
+        try fn(spark, warmDir).count() catch { case _: Throwable => () }
       }
     graft.sources.Tables.all.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => () }
     }
-    val battery = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => names.contains(n) }
-    val results = healBreaches(spark, sfDir,
-      runBattery(spark, sfDir, battery, reps), reps)
-    val json = results.map { case (n, w, g, healed) =>
-      "\"" + n + "\":[" + w.map(t => math.round(t * 1000).toString).getOrElse("-1") +
-        "," + g + "," + (if (healed) 1 else 0) + "]"
-    }.mkString("{", ",", "}")
-    val w = new java.io.PrintWriter(outFile)
-    try w.println(json) finally w.close()
-    spark.stop()
-  }
-
-  /** Fork one child JVM per shard (sequentially — they each use every
-    * core) with the parent's exact JVM args + classpath; returns the
-    * merged name→(ms, gcMs) map. A shard that dies retries once, then
-    * its queries report -1.
-    */
-  private def runSharded(sfDir: String, allNames: Seq[String], nShards: Int,
-                         reps: Int): Map[String, (Long, Long, Boolean)] = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val cp = System.getProperty("java.class.path")
-    val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Boolean)]
-    (0 until nShards).foreach { i =>
-      val out = java.nio.file.Files.createTempFile(s"graft-bench-shard$i-", ".json")
-      val log = java.nio.file.Files.createTempFile(s"graft-bench-shard$i-", ".log")
-      def attempt(): Boolean = {
-        val pb = new ProcessBuilder(
-          (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench", sfDir)): _*)
-        pb.environment().put("SPARK_GRAFT_BENCH_SHARD", s"$i/$nShards")
-        pb.environment().put("SPARK_GRAFT_BENCH_SHARD_OUT", out.toString)
-        pb.environment().put("SPARK_GRAFT_BENCH_REPS", reps.toString)
-        pb.redirectErrorStream(true)
-        pb.redirectOutput(log.toFile)
-        val p = pb.start()
-        p.waitFor() == 0 && java.nio.file.Files.size(out) > 2
-      }
-      val ok = attempt() || attempt()
-      if (ok) {
-        val txt = new String(java.nio.file.Files.readAllBytes(out), "UTF-8").trim
-        // {"name":[ms,gc,healed],...} — names never contain quotes/commas
-        """"([^"]+)":\[(-?\d+),(-?\d+),([01])\]""".r.findAllMatchIn(txt).foreach { m =>
-          acc(m.group(1)) = (m.group(2).toLong, m.group(3).toLong, m.group(4) == "1")
-        }
-      }
-      java.nio.file.Files.deleteIfExists(out)
-    }
-    // shard membership is round-robin over the sorted names: stable as
-    // the battery grows, and it spreads name-adjacent heavy families
-    // (q_dedup_*) across JVMs instead of stacking one shard
-    allNames.map(n => n -> acc.getOrElse(n, (-1L, -1L, false))).toMap
+    healBreaches(spark, sfDir, runBattery(spark, sfDir, queries.toSeq, reps), reps).map {
+      case (n, w, g, healed) => n -> (w.map(t => math.round(t * 1000)).getOrElse(-1L), g, healed)
+    }.toMap
   }
 
   def main(args: Array[String]): Unit = {
@@ -290,38 +155,12 @@ object Bench {
     val allNames = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
 
-    // child-shard mode: run the slice, write the file, exit
-    sys.env.get("SPARK_GRAFT_BENCH_SHARD") match {
-      case Some(spec) =>
-        val Array(i, n) = spec.split('/').map(_.toInt)
-        val mine = allNames.zipWithIndex.collect {
-          case (name, idx) if idx % n == i => name
-        }.toSet
-        runShard(sfDir, mine, reps, sys.env("SPARK_GRAFT_BENCH_SHARD_OUT"))
-        return
-      case None => ()
-    }
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val timed = measure(spark, sfDir, allNames.toSet, reps)
+    spark.stop()
 
-    val nShards = sys.env.get("SPARK_GRAFT_BENCH_SHARDS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
-      .map(n => if (only.isDefined) 1 else n)
-      .getOrElse(1)
-
-    val merged: Map[String, (Long, Long, Boolean)] =
-      if (nShards <= 1) {
-        // in-process path (diagnostic subsets, explicit override)
-        val out = java.nio.file.Files.createTempFile("graft-bench-single-", ".json")
-        val mine = allNames.toSet
-        runShard(sfDir, mine, reps, out.toString)
-        val txt = new String(java.nio.file.Files.readAllBytes(out), "UTF-8").trim
-        java.nio.file.Files.deleteIfExists(out)
-        val m = """"([^"]+)":\[(-?\d+),(-?\d+),([01])\]""".r.findAllMatchIn(txt).map { mm =>
-          mm.group(1) -> (mm.group(2).toLong, mm.group(3).toLong, mm.group(4) == "1")
-        }.toMap
-        allNames.map(n => n -> m.getOrElse(n, (-1L, -1L, false))).toMap
-      } else runSharded(sfDir, allNames, nShards, reps)
-
-    val ordered = allNames.map(n => (n, merged(n)))
+    val ordered = allNames.map(n => (n, timed(n)))
     val qv = ordered.map { case (_, (ms, _, _)) => ms.toString }.mkString("[", ",", "]")
     val total = ms3(ordered.map(_._2._1).filter(_ >= 0).sum / 1000.0)
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
@@ -344,7 +183,7 @@ object Bench {
         .mkString("[", ",", "]")
       val w = new java.io.PrintWriter("bench_out.json")
       try w.println(
-        s"""{"metric":"total","value":$total,"unit":"sec","shards":$nShards,"queries":$fullQs,"gc_ms":$gcQs,"healed":$healedQs,"sf":$sfNum}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"gc_ms":$gcQs,"healed":$healedQs,"sf":$sfNum}""")
       finally w.close()
     } catch { case _: Throwable => () }
     println(line)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: dump explain("formatted") of every query to a file,
   * PLUS a machine-readable `<outFile>.audit.json` with per-query
   * counts of the plan shapes the scale contract cares about
@@ -40,16 +38,8 @@ object Explain {
     // optional third arg (local iteration only — the driver passes two):
     // comma-separated query names; restricts the audit to that subset
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // fixed width: check_plans.py's sf0.01 ceilings were measured at 4
+    val spark = GraftSession.get(4)
     val sb = new StringBuilder
     val audit = new StringBuilder
     def count(plan: String, token: String): Int =

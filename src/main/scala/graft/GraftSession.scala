@@ -2,18 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-stop session factory with graft's recommended configuration —
-  * what a library user calls instead of hand-assembling confs.
+/** The one session factory: every main, the test suite and a library
+  * user build their session here, so all of them plan under the same
+  * rule set and static confs.
   */
 object GraftSession {
-  def builder(master: String = "local[*]",
-              shufflePartitions: Int = 32): SparkSession.Builder =
+  /** Local width: `SPARK_GRAFT_CPUS` if set, else every core. */
+  def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `local[cpus]` with one shuffle partition per core — never Spark's
+    * 200 default on one machine (AQE coalesces on a real cluster).
+    */
+  def builder(cpus: Int): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
+      .master(s"local[$cpus]")
       .appName("graft")
-      // local-mode default; a real cluster raises this (or lets AQE
-      // coalesce) — never leave Spark's 200 default on a laptop
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // the driver-generated events table uses parquet TIMESTAMP(NANOS)
@@ -28,8 +34,8 @@ object GraftSession {
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
 
-  def get(master: String = "local[*]"): SparkSession = {
-    val s = builder(master).getOrCreate()
+  def get(cpus: Int): SparkSession = {
+    val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

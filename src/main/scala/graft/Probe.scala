@@ -1,25 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch timing harness for local iteration (not part of the driver
   * contract): times one named query N times at a given SF dir and
-  * prints per-run wall-clock so a hot spot can be bisected.
+  * prints per-run wall-clock so a hot spot can be bisected. Each run is
+  * materialized through the `noop` sink: under `count()` column pruning
+  * skips most of a query's work.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = name.split(',').map(_.trim).filter(_.nonEmpty)
     // per-job accounting: where does a multi-action query spend its
@@ -49,8 +41,8 @@ object Probe {
         System.gc()
         agg.clear()
         val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        println(f"[probe] $nm run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        println(f"[probe] $nm run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
         if (i == reps) {
           import scala.jdk.CollectionConverters._
           agg.asScala.toSeq.sortBy(_._1).foreach { case (id, (ms, nt)) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** §8 scaling-study harness for the dedup tail (local iteration tool,
   * not part of the driver contract): prints the winnowing candidate
   * statistics of the PRODUCTION (xxhash64) pipeline plus wall times for
@@ -16,15 +14,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleStudy {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // optional second arg: comma-separated query names to time instead
     // of the default dedup-tail pair (candidate stats print only for
@@ -77,8 +67,9 @@ object ScaleStudy {
       val fn = SparkEntry.queries(name)
       System.gc()
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      println(f"[scale] $name: ${(System.nanoTime() - t0) / 1e9}%.3f s ($n rows)")
+      // full materialization: count() lets column pruning skip the work
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      println(f"[scale] $name: ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
     spark.stop()
   }

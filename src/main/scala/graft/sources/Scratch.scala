@@ -21,11 +21,10 @@ object Scratch {
 
   val confKey = "spark.graft.scratch.dir"
 
-  /** Total fresh artifact builds this JVM (misses of the `ensure`
-    * memo). The bench snapshots it around each timed rep so
-    * bench_out.json can attribute index/park build cost to the query
-    * that paid it — without this column a warm-scratch run and a
-    * cold-scratch run are indistinguishable on their face.
+  /** Completed fresh artifact builds this JVM: a build that throws is
+    * never counted. perfbench diffs it around each timed request and
+    * reports the sum as `sources.scratch_builds`, so a warm-scratch run
+    * and a cold-scratch run are distinguishable on their face.
     */
   val buildCount = new java.util.concurrent.atomic.AtomicLong(0)
 

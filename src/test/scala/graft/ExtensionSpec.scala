@@ -12,6 +12,16 @@ class ExtensionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import TestSpark.sf
 
+  test("the test session plans under the same rule set and confs as Verify and Bench") {
+    assert(spark.conf.get("spark.sql.optimizer.excludedRules")
+      .contains("InferFiltersFromGenerate"))
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "10000")
+    Seq("cosine_sim", "minhash_sig", "simhash64").foreach { f =>
+      assert(spark.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f)), s"$f not registered")
+    }
+  }
+
   test("freq_items keeps every true heavy hitter with bounded undercount") {
     val events = graft.sources.Tables.events(spark, sf)
     val n = events.count()

@@ -4,18 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt test forks one JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // fixed width: the suite's expectations were measured at 4
+  lazy val spark: SparkSession = GraftSession.get(4)
   val sf: String = "/root/testdata/sf0.001"
 }
