@@ -57,8 +57,7 @@ object ScaleStudy {
       return
     }
     if (args.length <= 1) {
-      val stats = graft.operators.Dedup.candidateStats(
-        graft.sources.Tables.documents(spark, sfDir)).collect().head
+      val stats = graft.operators.Dedup.candidateStats(spark, sfDir).collect().head
       println(s"[scale] $sfDir candidateStats: " +
         stats.schema.fieldNames.zip(stats.toSeq).map { case (n, v) => s"$n=$v" }
           .mkString(", "))

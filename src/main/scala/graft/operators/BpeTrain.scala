@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** E10c — BPE merge-table TRAINING (SURVEY §2). Public algorithm:
   * Sennrich et al. 2016, "Neural Machine Translation of Rare Words with
@@ -107,10 +107,7 @@ object BpeTrain {
     * fingerprint key rebuilds on in-place data regeneration).
     */
   def learnMerges(spark: SparkSession, dir: String, k: Int = 12): DataFrame = {
-    val fp = Similarity.dataFingerprintFor(spark, dir, "documents.parquet")
-    val path = graft.sources.Scratch.ensure(spark,
-      s"graft-bpe-v1-${graft.sources.Scratch.digest(dir)}",
-      graft.sources.Scratch.digest(k.toString, fp)) { p =>
+    val path = Scratch.ensure(spark, "graft-bpe-v1", dir, "documents.parquet", k) { p =>
       learnMergesDf(Tables.documents(spark, dir), k)
         .coalesce(1).write.mode("overwrite").parquet(s"$p/merges")
     }

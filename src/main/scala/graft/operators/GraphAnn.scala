@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.CosineSim
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** E7e — graph ANN via NN-descent (SURVEY §2).
   *
@@ -122,16 +122,14 @@ object GraphAnn {
     */
   def ensureGraph(spark: SparkSession, dir: String,
                   rounds: Int = nnDescentRounds): String = {
-    val fp = Similarity.dataFingerprint(spark, dir)
     // v3 (r14): the seeding-cell count is now the auto-scaled nCells —
     // encode it so a graph built under a different schedule can never
     // be served stale (the r13 nngraph-key lesson). rounds rides in
     // the FAMILY (both operating points coexist per dir), the data
     // fingerprint + knobs in the generation (superseded ones swept).
     val nc = Similarity.autoCells(Similarity.corpusN(spark, dir))
-    graft.sources.Scratch.ensure(spark,
-      s"graft-nngraph-v3-r$rounds-${graft.sources.Scratch.digest(dir)}",
-      graft.sources.Scratch.digest(s"$degree#$seedAssignments#$nc", fp))(
+    Scratch.ensure(spark, s"graft-nngraph-v3-r$rounds", dir, "embeddings.parquet",
+        degree, seedAssignments, nc)(
       p => buildGraphAt(spark, dir, p, rounds))
   }
 

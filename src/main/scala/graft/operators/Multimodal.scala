@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{AudioCodec, ImageCodec}
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Multimodal (binary) column plumbing (SURVEY §2 E12).
   *
@@ -180,30 +180,18 @@ object Multimodal {
       }.toDF()
   }
 
-  /** Media-table location for a data dir (under [[graft.sources.Scratch]],
-    * never inside the read-only data dir; versioned key like the IVF
-    * and inverted indexes).
-    */
-  def mediaPath(spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    // v2: r14 changed the audio synthesis to exact integer phase
-    // range reduction — a v1 media table carries the old waveform
-    graft.sources.Scratch.path(spark,
-      s"graft-media-v2-${graft.sources.Scratch.digest(dir)}")
-
   /** Synthesize-once: the media table is a stand-in for a STORED input
     * (a real pipeline reads payload bytes from object storage, it does
-    * not synthesize them per query). Write it per data dir on first
-    * use; every later query decodes the stored payloads — so the E12
-    * query times codec decode, not payload synthesis.
+    * not synthesize them per query). Write it per documents generation
+    * on first use (under [[Scratch]], never inside the read-only data
+    * dir); every later query decodes the stored payloads — so the E12
+    * query times codec decode, not payload synthesis. The family's
+    * version moves whenever the synthesis changes, so a table from an
+    * older synthesis is never served.
     */
-  def ensureMediaTable(spark: SparkSession, dir: String): String = {
-    val path = mediaPath(spark, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker))
-      mediaTable(spark, dir).write.mode("overwrite").parquet(path)
-    path
-  }
+  def ensureMediaTable(spark: SparkSession, dir: String): String =
+    Scratch.ensure(spark, "graft-media-v3", dir, "documents.parquet")(p =>
+      mediaTable(spark, dir).write.mode("overwrite").parquet(p))
 
   // ---- E90: perceptual image dedup (aHash) ---------------------------
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** E36 — MODEL-BASED quality filtering: distill the E14 rule battery
   * into a trained linear classifier (the fastText-/GPT-3-style quality
@@ -162,43 +162,40 @@ object QualityModel {
     Fit(w.take(k), w(k), losses, acc)
   }
 
+  /** Memoized fit per data fingerprint (the q_bpe_train contract: a
+    * trained model is a BUILD ARTIFACT — the fit runs once per data
+    * generation, scoring reuses it; the spec still exercises the live
+    * fit). The artifact is the k+1 weights, the training accuracy and
+    * the k standardization pairs, stored as one line of text under
+    * [[Scratch]] and read back through the Hadoop FileSystem, so the
+    * warm path starts no Spark job.
+    */
+  private def ensureModel(spark: SparkSession, dir: String): (Fit, Array[Double], Array[Double]) = {
+    val file = new org.apache.hadoop.fs.Path(
+      Scratch.ensure(spark, "graft-qmodel-v3", dir, "documents.parquet") { p =>
+        val feats = featureFrame(spark, dir)
+        val f = fit(feats)
+        val (mu, sd, _) = standardization(feats)
+        val out = new org.apache.hadoop.fs.Path(p, "model.txt")
+        val os = out.getFileSystem(spark.sparkContext.hadoopConfiguration).create(out, true)
+        try os.write(((f.weights :+ f.bias :+ f.accuracy) ++ mu ++ sd)
+          .mkString(",").getBytes("UTF-8"))
+        finally os.close()
+      }, "model.txt")
+    val in = file.getFileSystem(spark.sparkContext.hadoopConfiguration).open(file)
+    val nums =
+      try new String(in.readAllBytes(), "UTF-8").trim.split(",").map(_.toDouble)
+      finally in.close()
+    val k = featureNames.length
+    (Fit(nums.take(k), nums(k), Array.empty, nums(k + 1)),
+      nums.slice(k + 2, 2 * k + 2), nums.slice(2 * k + 2, 3 * k + 2))
+  }
+
   /** ☆ entry — fit on the corpus' own rule labels, then score every
     * document with the learned model as one literal-weight expression:
     * (doc_id, model_score, pred, label), so disagreement rows are the
     * margins a threshold sweep would re-adjudicate.
     */
-  /** Memoized fit per data fingerprint (the q_bpe_train contract: a
-    * trained model is a BUILD ARTIFACT — the fit runs once per data
-    * dir, scoring reuses it; the spec still exercises the live fit).
-    * The artifact is the k+1 weights plus the k standardization pairs,
-    * stored as one line of text under tmpdir, `_COMPLETE`-free because
-    * the single-file write is atomic-enough via temp+rename.
-    */
-  private def ensureModel(spark: SparkSession, dir: String): (Fit, Array[Double], Array[Double]) = {
-    val fp = Similarity.dataFingerprintFor(spark, dir, "documents.parquet")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir#$fp".getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), s"graft-qmodel-v2-$key.txt")
-    if (java.nio.file.Files.exists(path)) {
-      val nums = java.nio.file.Files.readString(path).trim.split(",").map(_.toDouble)
-      val k = featureNames.length
-      (Fit(nums.take(k), nums(k), Array.empty, nums(k + 1)),
-        nums.slice(k + 2, 2 * k + 2), nums.slice(2 * k + 2, 3 * k + 2))
-    } else {
-      val feats = featureFrame(spark, dir)
-      val f = fit(feats)
-      val (mu, sd, _) = standardization(feats)
-      val line = (f.weights :+ f.bias :+ f.accuracy).mkString(",") + "," +
-        mu.mkString(",") + "," + sd.mkString(",")
-      val tmp = java.nio.file.Files.createTempFile(path.getParent, "qmodel", ".tmp")
-      java.nio.file.Files.writeString(tmp, line)
-      java.nio.file.Files.move(tmp, path,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      (f, mu, sd)
-    }
-  }
-
   def qualityModel(spark: SparkSession, dir: String): DataFrame = {
     val (f, mu, sd) = ensureModel(spark, dir)
     // scoring is one literal-weight projection over a fresh scan — the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.plans.CosineSim
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Similarity search over embedding columns (SURVEY §2 E6/E7).
   *
@@ -49,7 +49,8 @@ object Similarity {
   private val corpusCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private[operators] def corpusN(spark: SparkSession, dir: String): Long =
-    corpusCounts.computeIfAbsent(s"$dir#${dataFingerprint(spark, dir)}",
+    corpusCounts.computeIfAbsent(
+      s"$dir#${Scratch.fingerprint(spark, dir, "embeddings.parquet")}",
       _ => Tables.embeddings(spark, dir)
         .filter(col("vec_id") >= nQueries).count())
 
@@ -349,48 +350,18 @@ object Similarity {
     corpusCells.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$indexPath/cells")
     centroids.write.mode("overwrite").parquet(s"$indexPath/centroids")
-    // completion marker written LAST: a crash between the two writes
-    // above must not leave a 'complete' index with cells but no
-    // centroids (ensureIvfIndex checks only this marker)
-    val done = new org.apache.hadoop.fs.Path(s"$indexPath/_COMPLETE")
-    done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(done, true).close()
   }
 
   /** Build-once-probe-many for the benched entries (the InvertedIndex
     * ensure pattern): the k-means build runs only if no completed
-    * index exists for this data dir — first invocation per dir pays
+    * index exists for this data fingerprint — first invocation pays
     * the fit, every later one is probe-only, the deployment shape.
-    * The key carries a layout version; content lives under tmpdir,
-    * never inside the read-only data dir.
+    * The key carries a layout version; content lives under
+    * [[Scratch]], never inside the read-only data dir.
     */
-  /** Digest of the source table's file listing (path, length, mtime):
-    * regenerating the data in-place changes the key, so a memoized
-    * index can never serve stale cell assignments for new data.
-    */
-  private[operators] def dataFingerprint(spark: SparkSession, dir: String): String =
-    dataFingerprintFor(spark, dir, "embeddings.parquet")
-
-  private[operators] def dataFingerprintFor(spark: SparkSession, dir: String,
-                                            table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    if (fs.exists(p)) {
-      fs.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
-        md.update(s"${st.getPath.getName}#${st.getLen}#${st.getModificationTime};"
-          .getBytes("UTF-8"))
-      }
-    }
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   def ensureIvfIndex(spark: SparkSession, dir: String, nCells: Int = -1): String = {
     val nc = if (nCells > 0) nCells else autoCells(corpusN(spark, dir))
-    val fp = dataFingerprint(spark, dir)
-    graft.sources.Scratch.ensure(spark,
-      s"graft-ivfidx-v3-${graft.sources.Scratch.digest(dir)}",
-      graft.sources.Scratch.digest(nc.toString, fp))(
+    Scratch.ensure(spark, "graft-ivfidx-v3", dir, "embeddings.parquet", nc)(
       p => writeIvfIndex(spark, dir, p, nc))
   }
 
@@ -1408,10 +1379,8 @@ object Similarity {
   def ensurePqIndex(spark: SparkSession, dir: String, m: Int = 8,
                     ks: Int = 16, iters: Int = 10,
                     trainSample: Int = 2048): String = {
-    val fp = dataFingerprint(spark, dir)
-    graft.sources.Scratch.ensure(spark,
-      s"graft-pqidx-v2-${graft.sources.Scratch.digest(dir)}",
-      graft.sources.Scratch.digest(s"$m#$ks#$iters#$trainSample", fp)) { path =>
+    Scratch.ensure(spark, "graft-pqidx-v2", dir, "embeddings.parquet",
+        m, ks, iters, trainSample) { path =>
       val (_, c) = queryCorpus(spark, dir)
       val (books, codes) = pqTrainEncode(spark, c, m, ks, iters, trainSample)
       codes.write.mode("overwrite").parquet(s"$path/codes")

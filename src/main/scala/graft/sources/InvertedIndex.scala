@@ -79,28 +79,18 @@ object InvertedIndex {
     spark.read.parquet(indexPath)
       .filter(col("tb") === bucketOf(term) && col("token") === term)
 
-  /** Index location for a data dir (content under [[Scratch]] —
-    * never inside the read-only data dir). The key carries a layout
-    * version so an index persisted by an older build (unsorted row
-    * groups) is never mistaken for the current format.
-    */
-  def defaultPath(spark: SparkSession, dir: String): String =
-    Scratch.path(spark, s"graft-invidx-v2-${Scratch.digest(dir)}")
-
-  /** Build-once-probe-many: build the index for `dir` only if a
-    * completed build (parquet `_SUCCESS` marker) isn't already there.
-    * Queries go through this, so only the first invocation per data
-    * dir pays the token shuffle; every later one is probe-only — the
+  /** Build-once-probe-many: build the index for `dir` only if no
+    * completed build exists for its documents' fingerprint (content
+    * under [[Scratch]] — never inside the read-only data dir; the
+    * family carries a layout version so an index persisted by an older
+    * build is never mistaken for the current format). Queries go
+    * through this, so only the first invocation per data generation
+    * pays the token shuffle; every later one is probe-only — the
     * deployment shape, and what the benchmark should be timing.
     */
-  def ensureIndex(spark: SparkSession, dir: String): String = {
-    val path = defaultPath(spark, dir)
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker))
-      build(spark, Tables.documents(spark, dir), path)
-    path
-  }
+  def ensureIndex(spark: SparkSession, dir: String): String =
+    Scratch.ensure(spark, "graft-invidx-v3", dir, "documents.parquet")(p =>
+      build(spark, Tables.documents(spark, dir), p))
 
   /** C50a — term query through the index (memoized build + probe). */
   def searchIndexed(spark: SparkSession, dir: String, term: String = "spark"): DataFrame = {
@@ -341,15 +331,12 @@ object InvertedIndex {
     * `reverse(token)` too and rewrites the leading wildcard into a
     * PREFIX probe on the reversed field, which pushes as an ordinary
     * `StringStartsWith` over reversed-token-sorted row groups. The
-    * reversed arm is its own memoized build (same `_SUCCESS` contract
-    * as the main index); probes read dictionary-range-sized data at
-    * any corpus size.
+    * reversed arm is its own memoized build (same contract as the
+    * main index); probes read dictionary-range-sized data at any
+    * corpus size.
     */
-  def ensureReverseIndex(spark: SparkSession, dir: String): String = {
-    val path = defaultPath(spark, dir) + "-rev"
-    val marker = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
+  def ensureReverseIndex(spark: SparkSession, dir: String): String =
+    Scratch.ensure(spark, "graft-invidxrev-v1", dir, "documents.parquet") { path =>
       val parts = math.max(spark.sparkContext.defaultParallelism, nTokenBuckets)
       Tables.atComputeParallelism(Tables.documents(spark, dir))
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
@@ -363,8 +350,6 @@ object InvertedIndex {
         .option("parquet.block.size", defaultRowGroupBytes)
         .partitionBy("rb").parquet(path)
     }
-    path
-  }
 
   /** C50f entry — `*<suffix>` search: per matching token, document
     * frequency and total term frequency (the dictionary view a

@@ -15,8 +15,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * [[StreamingQueryListener]] captures every micro-batch's progress
   * event into a bounded in-memory ring, queryable as a DataFrame — the
   * `_cat/streams` a pipeline operator reads first (rows/sec, batch
-  * duration, watermark lag, state size), and persistable to parquet for
-  * the fleet-wide rollup.
+  * duration, watermark lag, state size).
   *
   * Scale shape: the listener runs on the DRIVER and records one tiny
   * row per (query, micro-batch) — cost is independent of data volume;
@@ -24,9 +23,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * a local DataFrame (parallelize over ≤cap rows), so reading the
   * metrics never touches the executors' data path.
   */
-final class IngestMetrics(spark: SparkSession, capacity: Int = 4096)
-    extends StreamingQueryListener {
-  import IngestMetrics.ProgressRow
+final class IngestMetrics(spark: SparkSession) extends StreamingQueryListener {
+  import IngestMetrics.{ProgressRow, capacity}
 
   private val buf = new java.util.ArrayDeque[ProgressRow]()
 
@@ -78,15 +76,12 @@ final class IngestMetrics(spark: SparkSession, capacity: Int = 4096)
           unix_timestamp(col("ts")) -
             unix_timestamp(to_timestamp(col("watermark")))))
   }
-
-  /** Persist the current snapshot for the fleet-wide metrics rollup
-    * (append-mode: each flush adds the batches seen since attach).
-    */
-  def flushTo(s: SparkSession, path: String): Unit =
-    snapshot(s).write.mode("append").parquet(path)
 }
 
 object IngestMetrics {
+  /** Ring cap: the most recent micro-batches kept per listener. */
+  val capacity = 4096
+
   final case class ProgressRow(
       query_name: String,
       run_id: String,

@@ -161,16 +161,6 @@ object LogPipeline {
       }
       .start()
 
-  /** A5b — idempotent micro-batch sink (exactly-once on top of
-    * foreachBatch's at-least-once): a crashed batch RE-RUNS with the
-    * same batchId, so a plain append duplicates its rows. The sink
-    * keys the layout on `epoch=batchId` and overwrites ONLY that
-    * epoch's directory — redelivery replaces its own previous (maybe
-    * partial) output instead of appending beside it, the standard
-    * partition-by-batch-id idempotence pattern. Readers treat `epoch`
-    * as one more partition column; downstream compaction (A8) folds
-    * epochs into the date layout on its own schedule.
-    */
   /** A5c — delivery-failure dead-lettering (the OTHER half of the
     * reference's failure handling: A5's DLQ catches PARSE failures,
     * while Firehose `retryOptions` + `s3BackupMode:
@@ -209,6 +199,16 @@ object LogPipeline {
     false
   }
 
+  /** A5b — idempotent micro-batch sink (exactly-once on top of
+    * foreachBatch's at-least-once): a crashed batch RE-RUNS with the
+    * same batchId, so a plain append duplicates its rows. The sink
+    * keys the layout on `epoch=batchId` and overwrites ONLY that
+    * epoch's directory — redelivery replaces its own previous (maybe
+    * partial) output instead of appending beside it, the standard
+    * partition-by-batch-id idempotence pattern. Readers treat `epoch`
+    * as one more partition column; downstream compaction (A8) folds
+    * epochs into the date layout on its own schedule.
+    */
   def idempotentBatchWrite(batch: DataFrame, root: String, batchId: Long,
                            partitionCols: Seq[String] = Seq("log_date")): Unit = {
     // fold-aware ingest (the other half of LogStore.foldEpochs's

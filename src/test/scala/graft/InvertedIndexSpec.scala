@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{InvertedIndex, Tables}
+import graft.sources.{InvertedIndex, Scratch, Tables}
 
 /** C50 — persisted positional inverted index: probes must be
   * partition-pruned to the term's token bucket, and phrase adjacency
@@ -96,11 +96,24 @@ class InvertedIndexSpec extends AnyFunSuite {
 
   test("queries memoize the build: second invocation probes the existing index") {
     InvertedIndex.searchIndexed(spark, TestSpark.sf).collect()
-    val marker = new java.io.File(InvertedIndex.defaultPath(spark, TestSpark.sf), "_SUCCESS")
-    assert(marker.exists())
-    val built = marker.lastModified()
+    val built = Scratch.buildCount.get
     InvertedIndex.searchIndexed(spark, TestSpark.sf).collect()
-    assert(marker.lastModified() == built, "second invocation rebuilt the index")
+    assert(Scratch.buildCount.get == built, "second invocation rebuilt the index")
+  }
+
+  test("regenerating the documents in place rebuilds the index instead of serving the stale one") {
+    val dir = Files.createTempDirectory("graft-invidx-regen").toString
+    def writeDocs(n: Int): Unit =
+      (0 until n).map(i => (i.toLong, s"spark doc $i", "web"))
+        .toDF("doc_id", "text", "source")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    writeDocs(3)
+    assert(InvertedIndex.searchIndexed(spark, dir).count() == 3)
+    // the key is the documents' file-listing fingerprint, not the dir:
+    // the new generation's rows must show
+    writeDocs(7)
+    assert(InvertedIndex.searchIndexed(spark, dir).as[(Long, Long)].collect().map(_._1)
+      .sameElements(0L until 7L), "the index built for the old generation was served")
   }
 
   test("prefix suggester pushes StartsWith and matches a direct token scan") {

@@ -19,12 +19,11 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("feature extraction is deterministic; payloads are real per kind (PNG/WAV magic, video=doc bytes)") {
     val f1 = Multimodal.features(spark, TestSpark.sf).collect()
-    val marker = new java.io.File(Multimodal.mediaPath(spark, TestSpark.sf), "_SUCCESS")
-    assert(marker.exists(), "features should persist the media table once per dir")
-    val built = marker.lastModified()
+    val built = graft.sources.Scratch.buildCount.get
     val f2 = Multimodal.features(spark, TestSpark.sf).collect()
     assert(f1.sameElements(f2))
-    assert(marker.lastModified() == built, "second invocation re-synthesized the payloads")
+    assert(graft.sources.Scratch.buildCount.get == built,
+      "second invocation re-synthesized the payloads")
     val docs = graft.sources.Tables.documents(spark, TestSpark.sf)
       .select(col("doc_id"), length(col("text")).as("n")).as[(Long, Int)].collect().toMap
     val payloads = Multimodal.mediaTable(spark, TestSpark.sf)
